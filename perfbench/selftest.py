@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Fast self-test of the benchmark on a tiny corpus (about two minutes).
+"""Fast self-test of the benchmark on a tiny corpus (about three minutes).
 
     python3 perfbench/selftest.py
 

@@ -41,15 +41,14 @@ def _rng(seed: int, stream: str) -> np.random.Generator:
     return np.random.default_rng([seed, tag])
 
 
-def corpus(seed: int, n_docs: int, first_id: int = 0) -> list[tuple[int, str, str]]:
-    """``[(doc_id, url, text)]`` for ids ``first_id .. first_id+n_docs-1``."""
-    rng = _rng(seed, f"corpus{first_id}")
+def corpus(seed: int, n_docs: int) -> list[tuple[int, str, str]]:
+    """``[(doc_id, url, text)]`` for ids ``0 .. n_docs-1``."""
+    rng = _rng(seed, "corpus")
     lens = rng.integers(30, 201, size=n_docs)
     idx = np.floor(rng.random(int(lens.sum())) ** 3.0 * VOCAB).astype(np.int64)
     words = [_word(int(v)) for v in idx]
     out, pos = [], 0
-    for i, n in enumerate(lens):
-        doc_id = first_id + i
+    for doc_id, n in enumerate(lens):
         out.append(
             (
                 doc_id,
